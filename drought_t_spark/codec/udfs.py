@@ -7,8 +7,6 @@ hot loop (token bit/byte packing) is fully vectorized.
 
 from __future__ import annotations
 
-import zlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -27,11 +25,6 @@ def encode_tokens_udf(tokens: pd.Series) -> pd.Series:
 def decode_tokens_udf(payload: pd.Series) -> pd.Series:
     """TSZ1 binary -> array<int32>; raises on CRC mismatch."""
     return payload.map(lambda b: tsz1.decode_tokens(b) if b is not None else None)
-
-
-@F.pandas_udf(T.LongType())
-def crc32_udf(payload: pd.Series) -> pd.Series:
-    return payload.map(lambda b: zlib.crc32(b) if b is not None else None).astype("int64")
 
 
 @F.pandas_udf(T.BinaryType())

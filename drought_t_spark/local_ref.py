@@ -18,7 +18,10 @@ Semantics notes shared with the Spark operators:
 * exact linear-interpolation percentile (np.percentile 'linear' ==
   Spark `percentile` == DuckDB `quantile_cont`).
 * pooling: chain-merge passes to fixed point with pre-pass severities —
-  identical rule to operators/pooling.py (normative).
+  identical rule to operators/pooling.py (normative). That module runs
+  runs → pooling → exclusion as one per-source NumPy kernel inside the
+  batch DAG; this file stays a separate, deliberately plain pandas
+  implementation so the parity tests compare two independent codings.
 """
 
 from __future__ import annotations

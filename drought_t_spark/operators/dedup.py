@@ -40,19 +40,6 @@ def shingles(text_col: str, k: int = 3):
     )
 
 
-def minhash_signature(shingle_col: str, n_hashes: int = 32):
-    """Array of n_hashes minima of seeded xxhash64 over the shingles.
-
-    Built as ONE transform over the seed range so `shingle_col` appears
-    exactly once — n_hashes separate array_min() expressions would let
-    CollapseProject inline (= re-evaluate) the shingle computation once
-    per hash function."""
-    return F.expr(
-        f"transform(sequence(0, {n_hashes - 1}),"
-        f" i -> array_min(transform({shingle_col}, s -> xxhash64(s, i))))"
-    )
-
-
 def minhash_signatures_arrow(
     base: DataFrame, k: int = 3, n_hashes: int = 32, seed: int = 7
 ) -> DataFrame:

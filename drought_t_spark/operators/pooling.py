@@ -1,136 +1,130 @@
-"""PL1 — inter-event time-and-volume (IC) pooling to fixed point
-(SURVEY.md §2.10; Fleig et al. 2006 §3.2).
+"""RL1/RL2/EV1 → PL1 → EX1 — the drought method after the threshold
+join, as one per-source kernel (SURVEY.md §2.10; Yevjevich 1967; Fleig
+et al. 2006 §3.2–3.3).
 
-Normative semantics (the NumPy oracle in tests/oracle.py implements the
-SAME algorithm — this is the executable spec standing in for the empty
-reference snapshot):
+Normative semantics (local_ref.run_site implements the SAME rules as
+the independent single-site oracle):
 
-  repeat until no merge:
+  runs: maximal constant-`below` stretches, below = x_ma < x0 strict,
+    null → false; an event is a below-run with severity Σ deficit and
+    peak max deficit; its gap (gap_t, gap_v) is the length and Σ excess
+    of the above-run that follows it, null for the last event.
+  pooling, repeat until no merge:
     for consecutive events (i, i+1) within a source (onset order):
       mergeable(i) ⇔ gap_t(i) ≤ t_c  AND  gap_v(i) ≤ p_c · s_i
-      (gap_t/gap_v = inter-event bucket count / excess volume of the
-       above-threshold run between them; s_i = CURRENT severity of the
-       left event, i.e. pre-pass value)
+      (s_i = CURRENT severity of the left event, i.e. pre-pass value)
     merge maximal chains of mergeable pairs in one pass:
       onset = onset_first, termination = term_last,
       duration = Σ d_members + Σ internal gap_t   (= d_i + t_i + d_{i+1})
       severity = Σ s_members − Σ internal gap_v   (= s_i + s_{i+1} − v_i)
+  exclusion: excluded ⇔ duration < d_min OR severity < s_min, with s_min
+    absolute or α · max severity of the source.
 
-Each pass is one window pass + one aggregation on the (tiny) event
-table; severities grow monotonically, so iterating reaches the
-sequential-pooling fixed point in ≤ ⌈log₂ max-chain⌉ passes.
-
-Spark shape: lag window → chain-id via running sum (the RL2 idiom
-lifted to the event table) → groupBy chain. Driver loop with
-localCheckpoint() per pass to keep the plan flat. No per-row Python.
+Every rule reads one source's event list, so the whole tail of the DAG
+is ONE `groupBy("source").applyInPandas` stage: the Python boundary is
+crossed once per source, and the fixed point is a loop inside the
+kernel. It needs no pass limit — every merging pass shrinks the list,
+so at most n − 1 passes merge. Sums fold left to right in time order,
+the order Spark's F.sum adds the same terms in over a sorted partition
+(and the streaming fold's order), so severities are bit-equal to the
+Spark window operators in operators/runs.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 
 from drought_t_spark.config import EngineConfig, DEFAULT
+from drought_t_spark.operators.runs import run_segments
+
+EVENTS_SCHEMA = (
+    "source string, event_id long not null, onset timestamp, termination timestamp, "
+    "duration long, severity double, intensity double, peak double, "
+    "pooled boolean, excluded boolean"
+)
+_COLUMNS = [f.split()[0] for f in EVENTS_SCHEMA.split(", ")]
 
 
-def events_with_gaps(run_events: DataFrame) -> DataFrame:
-    """Attach gap_t/gap_v (the following above-run's length/excess) to
-    each below-run event. Trailing gaps (no next event) stay null."""
-    gaps = run_events.where(F.col("below") == 0).select(
-        "source",
-        (F.col("run_id") - 1).alias("run_id"),  # gap follows below-run run_id
-        F.col("duration").alias("gap_t"),
-        F.col("excess").alias("gap_v"),
+def _fold(x: np.ndarray) -> float:
+    """Left-to-right sum (np.sum's pairwise tree would change the bits)."""
+    return float(np.cumsum(x)[-1])
+
+
+def site_events(pdf: pd.DataFrame, cfg: EngineConfig = DEFAULT) -> pd.DataFrame:
+    """One source's (source, bucket_start, x_ma, x0) rows → its final
+    event table: runs, IC pooling to the fixed point, ids, intensity,
+    exclusion."""
+    pdf = pdf.sort_values("bucket_start", kind="mergesort")
+    ts = pdf["bucket_start"].to_numpy()
+    b, d, e, starts, ends = run_segments(
+        pdf["x_ma"].to_numpy(dtype=np.float64), pdf["x0"].to_numpy(dtype=np.float64)
     )
-    ev = run_events.where(F.col("below") == 1)
-    w = Window.partitionBy("source").orderBy("onset")
-    return (
-        ev.join(gaps, ["source", "run_id"], "left")
-        # a trailing above-run is not an inter-event gap: null it out
-        .withColumn("gap_t", F.when(F.lead("onset").over(w).isNotNull(), F.col("gap_t")))
-        .withColumn("gap_v", F.when(F.lead("onset").over(w).isNotNull(), F.col("gap_v")))
-        .select(
-            "source", "onset", "termination", "duration", "severity",
-            "peak", "gap_t", "gap_v",
+    ev = np.flatnonzero(b[starts] == 1)
+    if len(ev) == 0:
+        return pd.DataFrame(columns=_COLUMNS)
+    s0, s1 = starts[ev], ends[ev]
+    onset, term = ts[s0], ts[s1 - 1]
+    dur = s1 - s0
+    sev = np.array([_fold(d[a:z]) for a, z in zip(s0, s1)])
+    peak = np.maximum.reduceat(d, starts)[ev]
+    # inter-event gap = the above-run after each event but the last
+    g = ev[:-1] + 1
+    gap_t = np.append(ends[g] - starts[g], -1)  # -1: no gap (never ≤ t_c)
+    gap_v = np.append([_fold(e[starts[k]:ends[k]]) for k in g], np.nan)
+    pooled = np.zeros(len(ev), bool)
+
+    while cfg.pooling == "ic":
+        join_prev = np.zeros(len(sev), bool)
+        join_prev[1:] = (
+            (gap_t[:-1] >= 0)
+            & (gap_t[:-1] <= cfg.pool_tc)
+            & (gap_v[:-1] <= cfg.pool_pc * sev[:-1])
         )
-        .withColumn("pooled", F.lit(False))
-    )
-
-
-def _pool_pass(ev: DataFrame, cfg: EngineConfig) -> DataFrame:
-    w = Window.partitionBy("source").orderBy("onset")
-    join_prev = (
-        F.lag("gap_t").over(w).isNotNull()
-        & (F.lag("gap_t").over(w) <= F.lit(cfg.pool_tc))
-        & (F.lag("gap_v").over(w) <= F.lit(cfg.pool_pc) * F.lag("severity").over(w))
-    )
-    flagged = ev.withColumn("join_prev", F.coalesce(join_prev, F.lit(False)))
-    chained = flagged.withColumn(
-        "chain",
-        F.sum(F.when(F.col("join_prev"), 0).otherwise(1)).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    # internal gap = gap_after of every chain member except the last.
-    # Chains are maximal runs of consecutive rows in (source, onset)
-    # order, so "last member" ⇔ the successor row (same window spec as
-    # the lag/running-sum above — no second Exchange/Sort for a
-    # descending re-sort) starts a different chain or doesn't exist.
-    marked = chained.withColumn(
-        "is_last",
-        F.coalesce(F.lead("chain").over(w) != F.col("chain"), F.lit(True)),
-    )
-    merged = marked.groupBy("source", "chain").agg(
-        F.min("onset").alias("onset"),
-        F.max("termination").alias("termination"),
-        (
-            F.sum("duration")
-            + F.coalesce(F.sum(F.when(~F.col("is_last"), F.col("gap_t"))), F.lit(0))
-        ).cast("long").alias("duration"),
-        (
-            F.sum("severity")
-            - F.coalesce(F.sum(F.when(~F.col("is_last"), F.col("gap_v"))), F.lit(0.0))
-        ).alias("severity"),
-        F.max("peak").alias("peak"),
-        F.max_by("gap_t", "onset").alias("gap_t"),
-        F.max_by("gap_v", "onset").alias("gap_v"),
-        (F.max("pooled") | (F.count("*") > 1)).alias("pooled"),
-    ).drop("chain")
-    return merged
-
-
-def pool_events(ev_with_gaps: DataFrame, cfg: EngineConfig = DEFAULT,
-                max_passes: int = 64) -> DataFrame:
-    """Iterate _pool_pass to fixed point (driver-side loop on a tiny
-    table; each pass localCheckpoint()ed to keep lineage flat)."""
-    if cfg.pooling != "ic":
-        return ev_with_gaps
-    # r6: no up-front checkpoint/count of the input — the input is
-    # consumed exactly once (by the first pass), and the convergence
-    # baseline comes from the first pass's own count. A pass applied to
-    # a fixed point is the identity (singleton chains re-aggregate to
-    # the same rows), so "two consecutive passes with equal counts"
-    # terminates at the same table as the old "pass count equals input
-    # count" check, two driver jobs cheaper per call.
-    ev = ev_with_gaps
-    n = -1
-    for _ in range(max_passes):
-        ev = _pool_pass(ev, cfg).localCheckpoint(eager=True)
-        m = ev.count()
-        if m == n:
+        if not join_prev.any():
             break
-        n = m
-    return ev
+        inner = np.append(join_prev[1:], False)  # member with a successor in its chain
+        head = np.flatnonzero(~join_prev)
+        last = np.append(head[1:], len(sev)) - 1
+        merged = sev[head]
+        for k in np.flatnonzero(last > head):
+            h, z = head[k], last[k]
+            merged[k] = _fold(sev[h:z + 1]) - _fold(gap_v[h:z])
+        onset, term = onset[head], term[last]
+        dur = np.add.reduceat(dur + np.where(inner, gap_t, 0), head)
+        sev = merged
+        peak = np.maximum.reduceat(peak, head)
+        gap_t, gap_v = gap_t[last], gap_v[last]
+        pooled = np.logical_or.reduceat(pooled | join_prev | inner, head)
+
+    if cfg.min_severity_abs is not None:
+        s_min = float(cfg.min_severity_abs)
+    else:
+        s_min = cfg.min_severity_frac * sev.max()
+    return pd.DataFrame({
+        "source": pdf["source"].iloc[0],
+        "event_id": np.arange(1, len(sev) + 1, dtype=np.int64),
+        "onset": onset,
+        "termination": term,
+        "duration": dur.astype(np.int64),
+        "severity": sev,
+        "intensity": sev / dur,
+        "peak": peak,
+        "pooled": pooled,
+        "excluded": (dur < cfg.min_duration) | (sev < s_min),
+    })
 
 
-def finalize_events(ev: DataFrame) -> DataFrame:
-    """Event ids + intensity after pooling."""
-    w = Window.partitionBy("source").orderBy("onset")
+def pool_events(joined: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
+    """Threshold-joined series (source, bucket_start, x_ma, x0, …) →
+    final event table (EVENTS_SCHEMA), one grouped-map stage."""
+
+    def events(pdf: pd.DataFrame) -> pd.DataFrame:
+        return site_events(pdf, cfg)
+
     return (
-        ev.withColumn("event_id", F.row_number().over(w).cast("long"))
-        .withColumn("intensity", F.col("severity") / F.col("duration"))
-        .select(
-            "source", "event_id", "onset", "termination", "duration",
-            "severity", "intensity", "peak", "pooled",
-        )
+        joined.select("source", "bucket_start", "x_ma", "x0")
+        .groupBy("source")
+        .applyInPandas(events, EVENTS_SCHEMA)
     )

@@ -6,6 +6,9 @@ consecutive stretches of equal `below` per source, segmented with the
 lag→change-flag→running-sum idiom (W2/W3): a single window pass, no
 self-joins. `segment_runs` keeps BOTH below and above runs — pooling
 (PL1) needs the above-runs' inter-event time and excess volume.
+`run_segments` is the same RL1/RL2 step in NumPy over one source's
+sorted rows, shared by the batch drought kernel (operators/pooling.py)
+and the streaming fold (streaming/runs_stream.py).
 
 Scale: one shuffle keyed by source for the window pass; event tables are
 tiny afterwards (runs, not buckets).
@@ -13,6 +16,7 @@ tiny afterwards (runs, not buckets).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -63,15 +67,18 @@ def extract_events(runs: DataFrame, order_col: str = "bucket_start") -> DataFram
     )
 
 
-def drought_events(run_events: DataFrame) -> DataFrame:
-    """Below-runs only, with intensity, ordered ids per source."""
-    w = Window.partitionBy("source").orderBy("onset")
-    return (
-        run_events.where(F.col("below") == 1)
-        .withColumn("event_id", F.row_number().over(w).cast("long"))
-        .withColumn("intensity", F.col("severity") / F.col("duration"))
-        .select(
-            "source", "event_id", "onset", "termination",
-            "duration", "severity", "intensity", "peak", "run_id",
-        )
-    )
+def run_segments(x_ma: np.ndarray, x0: np.ndarray):
+    """RL1+RL2 over one source's time-sorted float64 rows (NaN = null).
+
+    Returns (below, deficit, excess, starts, ends): the strict below
+    flag (null → 0), deficit/excess floored at 0 with null → 0 (as
+    functions.scalars.deficit: `greatest` ignores nulls), and the
+    [start, end) row bounds of each maximal constant-`below` run."""
+    nn = ~(np.isnan(x_ma) | np.isnan(x0))
+    b = ((x_ma < x0) & nn).astype(np.int64)
+    d = np.where(nn, np.maximum(x0 - x_ma, 0.0), 0.0)
+    e = np.where(nn, np.maximum(x_ma - x0, 0.0), 0.0)
+    chg = np.flatnonzero(np.diff(b) != 0) + 1
+    starts = np.concatenate(([0], chg))
+    ends = np.concatenate((chg, [len(b)]))
+    return b, d, e, starts, ends

@@ -10,10 +10,8 @@ from pyspark.sql import functions as F
 
 from drought_t_spark.config import EngineConfig, DEFAULT
 from drought_t_spark.operators import rollup as R
-from drought_t_spark.operators.exclusion import mark_minor
 from drought_t_spark.operators.gapfill import gap_fill
-from drought_t_spark.operators.pooling import events_with_gaps, finalize_events, pool_events
-from drought_t_spark.operators.runs import below_mask, extract_events, segment_runs
+from drought_t_spark.operators.pooling import pool_events
 from drought_t_spark.operators.smoothing import moving_avg
 from drought_t_spark.operators.threshold import attach_threshold, fixed_threshold, variable_threshold
 
@@ -36,17 +34,17 @@ def drought_events_for_tier(
     materialize=None,
 ) -> DataFrame:
     """The drought-method DAG on one rolled-up tier (SURVEY.md §3.2 #2):
-    gap-fill → MA → threshold(+broadcast join) → below-mask → runs →
-    raw events → IC pooling fixed point → minor exclusion.
+    gap-fill → MA → threshold(+broadcast join) → one grouped-map stage
+    per source: runs → IC pooling fixed point → minor exclusion
+    (operators/pooling.py `pool_events`).
 
-    Two intermediates are multi-consumer and MUST be materialized
-    (Spark recomputes a lazy subtree per consumer — no plan-level CSE):
-    the smoothed series `sm` (read once to derive the threshold and
-    once as the join left side) and the run-event table `rev` (read by
-    both the below-event and gap branches of events_with_gaps, and
-    again by the pooling loop's first checkpoint). Without these, the
-    DAG re-evaluated the full gap-fill+MA+percentile pipeline up to 4×
-    per run — measured 353 s vs 40 s on a 256-site × 10-year fixture.
+    One intermediate is multi-consumer and MUST be materialized (Spark
+    recomputes a lazy subtree per consumer — no plan-level CSE): the
+    smoothed series `sm`, read once to derive the threshold and once as
+    the join left side. Without it the DAG re-evaluates the gap-fill+MA
+    pipeline per consumer. Everything after the join has one consumer:
+    the joined rows are shuffled by source once and each source's events
+    are computed in one Python task.
 
     `materialize` makes that an explicit caller choice: None (default)
     = localCheckpoint(eager) — right for single-job runs, but it
@@ -64,14 +62,7 @@ def drought_events_for_tier(
     else:
         th = fixed_threshold(sm, cfg)
         joined = attach_threshold(sm, th, variable=False)
-    masked = below_mask(joined)
-    runs = segment_runs(masked)
-    rev = materialize(extract_events(runs))
-    ev = events_with_gaps(rev)
-    if cfg.pooling == "ic":
-        ev = pool_events(ev, cfg)
-    final = finalize_events(ev)
-    return mark_minor(final, cfg)
+    return pool_events(joined, cfg)
 
 
 def series_to_tier(df: DataFrame, site_col: str = "site", ts_col: str = "date",

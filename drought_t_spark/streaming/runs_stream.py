@@ -3,16 +3,19 @@ table marked out-of-scope v1): RL1+RL2+EV1 as an incremental
 `applyInPandasWithState` operator, emitting each maximal constant-
 `below` run the moment the first bucket of the NEXT run arrives.
 
-Batch remains the contract — the drought DAG (pooling PL1, exclusion
-EX1) still recomputes per tier, because pooling's fixed point needs the
-full event list. What streaming buys is the LIVE prefix: every run that
-has already terminated is emitted with exactly the batch operator's
-numbers (run_id, onset, termination, duration, severity, peak, excess),
-so a monitoring consumer sees drought events as they close instead of
-at the next batch recompute. Parity with `operators.runs` is pinned
-bit-for-bit by tests/test_streaming_runs.py, including across
-micro-batch boundaries, checkpoint restarts, and a run spanning many
-micro-batches.
+Batch remains the contract — the drought DAG (runs, pooling PL1,
+exclusion EX1 in one per-source kernel, operators/pooling.py) still
+recomputes per tier, because pooling's fixed point needs the full event
+list. What streaming buys is the LIVE prefix: every run that has
+already terminated is emitted with exactly the batch operator's numbers
+(run_id, onset, termination, duration, severity, peak, excess), so a
+monitoring consumer sees drought events as they close instead of at the
+next batch recompute. The below/deficit/excess/change-point step is the
+same NumPy helper the batch kernel uses (`operators.runs.run_segments`);
+this fold adds the state carry across micro-batches. Parity with the
+Spark window operators in `operators.runs` is pinned bit-for-bit by
+tests/test_streaming_runs.py, including across micro-batch boundaries,
+checkpoint restarts, and a run spanning many micro-batches.
 
 Semantics and scale notes:
 - Input: the rolled-up, gap-filled, threshold-joined series
@@ -60,6 +63,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from drought_t_spark.operators.runs import run_segments
 
 # Input contract: what below_mask/segment_runs consume (operators/runs.py).
 RUN_STREAM_INPUT = StructType(
@@ -151,15 +156,9 @@ def _fold_runs(
         keep[1:] = ts[1:] > ts[:-1]
         if not keep.all():
             pdf, ts = pdf[keep], ts[keep]
-        x_ma = pdf["x_ma"].to_numpy(dtype=np.float64)
-        x0 = pdf["x0"].to_numpy(dtype=np.float64)
-        nn = ~(np.isnan(x_ma) | np.isnan(x0))
-        b = ((x_ma < x0) & nn).astype(np.int64)  # RL1: strict, null->false
-        d = np.where(nn, np.maximum(x0 - x_ma, 0.0), 0.0)  # deficit
-        e = np.where(nn, np.maximum(x_ma - x0, 0.0), 0.0)  # excess
-        chg = np.flatnonzero(np.diff(b) != 0) + 1
-        starts = np.concatenate(([0], chg))
-        ends = np.concatenate((chg, [len(b)]))
+        b, d, e, starts, ends = run_segments(
+            pdf["x_ma"].to_numpy(dtype=np.float64), pdf["x0"].to_numpy(dtype=np.float64)
+        )
         # Sequential (cumsum) folds, NOT np.sum's pairwise tree: the batch
         # operator's F.sum folds the time-sorted partition left-to-right
         # element by element, and bit-parity requires the same addition

@@ -22,8 +22,6 @@ import pandas as pd
 
 M64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 VOCAB = 50257
-TS_EPOCH = np.datetime64("2024-01-01T00:00:00", "us")
-TICK_US = 60_000_000  # 1 minute
 
 
 def _mix(x: np.ndarray) -> np.ndarray:
@@ -169,11 +167,6 @@ def zipf_tokens(n: int, s: float = 1.2, seed: int = 42) -> np.ndarray:
     cdf /= cdf[-1]
     u = _u01(_key(seed, np.arange(n, dtype=np.uint64), 0x5A4950))
     return np.searchsorted(cdf, u).astype(np.int32)
-
-
-def seq_ts(seq: np.ndarray) -> np.ndarray:
-    """Derived event time for a seq index array (numpy datetime64[us])."""
-    return TS_EPOCH + (seq.astype(np.int64) * TICK_US).astype("timedelta64[us]")
 
 
 # ---------------------------------------------------------------- F2 --

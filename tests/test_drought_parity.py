@@ -104,3 +104,44 @@ def test_pooling_merges_close_events(spark):
     assert bool(ev.pooled.iloc[0])
     assert int(ev.duration.iloc[0]) == 10  # 4 + 2 + 4
     np.testing.assert_allclose(ev.severity.iloc[0], ref.severity.iloc[0], rtol=1e-12)
+
+
+def test_pooling_reaches_fixed_point_past_64_passes(spark):
+    # P50 = 10: one deep dip (deficit 100), then 69 shallow dips (deficit
+    # 5) behind 1-day gaps of excess 5. Only the deep event pools its
+    # right neighbour (5 ≤ 0.1·100, but not 5 ≤ 0.1·5), so each pass
+    # absorbs exactly one more dip: the fixed point is 69 passes away.
+    vals = [10.0] * 200 + [-90.0] + [15.0, 5.0] * 69
+    pdf = pd.DataFrame({
+        "site": "s",
+        "date": pd.date_range("2024-01-01", periods=len(vals), freq="D"),
+        "value": vals,
+    })
+    cfg = EngineConfig(ma_window=1, threshold_mode="fixed", min_duration=1,
+                       min_severity_abs=0.0)
+    ev = drought_events_for_tier(
+        series_to_tier(spark.createDataFrame(pdf), ts_col="date"), "day", cfg
+    ).toPandas()
+    ref = local_ref.run_site(pdf.rename(columns={"date": "bucket_start"}), "day", cfg)
+    assert len(ref) == 1
+    assert int(ref.duration.iloc[0]) == 139 and float(ref.severity.iloc[0]) == 100.0
+    assert bool(ref.pooled.iloc[0])
+    _compare(ev, ref, "s")
+
+
+def test_job_count_does_not_depend_on_pooling_depth(spark, series):
+    _, tier_df = series
+    sc = spark.sparkContext
+    jobs = {}
+    for name, cfg in [("default", EngineConfig()),
+                      ("heavy-pool", EngineConfig(ma_window=1, pool_tc=10, pool_pc=0.5))]:
+        group = f"test-drought-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            drought_events_for_tier(tier_df, "day", cfg).toPandas()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["default"] <= 8, jobs
+    assert jobs["default"] == jobs["heavy-pool"], jobs
