@@ -3,9 +3,13 @@ SURVEY.md §2 SK1/SK2/J5, §4 checkpoint row).
 
 Model: a stage processes PARTITION GROUPS (sets of sources). After each
 group's sink write commits, one checkpoint row per partition plus a
-lineage row and metrics rows are appended to the ops tables. On
-restart, `pending_partitions` anti-joins (J5) the stage's work list
-against committed checkpoints — only unfinished groups re-run, and the
+lineage row and metrics rows are appended to the ops tables. The
+driver already holds those few rows, so each table gets them as one
+driver-written parquet file (`Warehouse.append_rows`: pyarrow, no
+Spark job), atomic by rename from a hidden temp name — a reader sees
+a commit's rows in a table all at once or not at all. On restart,
+`pending_partitions` anti-joins (J5) the stage's work list against
+committed checkpoints — only unfinished groups re-run, and the
 sink's per-partition overwrite makes re-runs idempotent (no duplicate
 buckets even if a crash hit mid-write).
 
@@ -190,19 +194,17 @@ def record_commit(
     metrics: dict[str, float] | None = None,
 ) -> None:
     seq = _next_seq(spark, wh)
-    cp = spark.createDataFrame(
+    wh.append_rows(
         [(job_id, stage, p, "committed", snapshot_id, seq) for p in partition_ids],
-        CHECKPOINTS,
+        CHECKPOINTS, CHECKPOINT_TBL,
     )
-    wh.append(cp, CHECKPOINT_TBL)
-    ln = spark.createDataFrame(
+    wh.append_rows(
         [(job_id, stage, None, snapshot_id, ",".join(sorted(partition_ids)),
           rows_in, rows_out)],
-        LINEAGE,
+        LINEAGE, LINEAGE_TBL,
     )
-    wh.append(ln, LINEAGE_TBL)
     if metrics:
-        mt = spark.createDataFrame(
-            [(job_id, stage, k, float(v)) for k, v in metrics.items()], METRICS
+        wh.append_rows(
+            [(job_id, stage, k, float(v)) for k, v in metrics.items()],
+            METRICS, METRICS_TBL,
         )
-        wh.append(mt, METRICS_TBL)

@@ -180,10 +180,12 @@ def run_rollup_job(
         written = wh.read(spark, f"agg.tier_{tier}").join(
             src.select("source").distinct(), ["source"], "left_semi"
         )
-        n_out = written.count()
+        # the token is "{rows}:{hash}" from one aggregation over the
+        # read-back; rows_out reuses its count
+        token = Warehouse.snapshot_token(written, ["source", "bucket_start"])
+        n_out = int(token.split(":", 1)[0])
         CP.record_commit(
             spark, wh, job_id, tier, partition_ids=[f"{tier}:all"],
-            snapshot_id=Warehouse.snapshot_token(written, ["source", "bucket_start"]),
-            rows_in=src.count(), rows_out=n_out,
+            snapshot_id=token, rows_in=src.count(), rows_out=n_out,
             metrics={"rolled_points": float(n_out)},
         )

@@ -7,7 +7,9 @@ parquet warehouse with hive-style partitioning:
 
 * idempotent partition overwrite — dynamic partitionOverwriteMode
   (re-running a stage replaces exactly the partitions it produces);
-* append — for ops tables;
+* append rows — for ops tables: the driver already holds the few rows
+  a commit adds, so they are written as one parquet file per table
+  with pyarrow (no Spark job), made visible by an atomic rename;
 * snapshot token — deterministic content token per write (row count +
   sum of a column hash), standing in for the Iceberg snapshot id.
 
@@ -19,9 +21,20 @@ call sites do not change shape.
 from __future__ import annotations
 
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+#: Spark → Arrow types of the ops-table columns (schemas.py T4)
+_ARROW_TYPES = {
+    T.StringType(): pa.string(),
+    T.LongType(): pa.int64(),
+    T.DoubleType(): pa.float64(),
+}
 
 
 class Warehouse:
@@ -54,8 +67,27 @@ class Warehouse:
             .parquet(self.path(table))
         )
 
-    def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(self.path(table))
+    def append_rows(self, rows: list[tuple], schema: T.StructType, table: str) -> None:
+        """Append driver-held `rows` (tuples in `schema` field order) as
+        one zstd parquet file. It is written under a hidden temp name —
+        leading `.`, no `.parquet` suffix, so Spark, pyarrow datasets and
+        `*.parquet` globs skip it — and renamed into place, so readers
+        see all of the rows or none. No rows, no file."""
+        if not rows:
+            return
+        arrow_schema = pa.schema(
+            [pa.field(f.name, _ARROW_TYPES[f.dataType], f.nullable) for f in schema.fields]
+        )
+        tbl = pa.table(
+            [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)],
+            schema=arrow_schema,
+        )
+        d = self.path(table)
+        os.makedirs(d, exist_ok=True)
+        name = uuid.uuid4()
+        tmp = os.path.join(d, f".part-{name}.tmp")
+        pq.write_table(tbl, tmp, compression="zstd")
+        os.rename(tmp, os.path.join(d, f"part-{name}.zstd.parquet"))
 
     def drop_partitions(self, table: str, partition_col: str, values: list[str]) -> None:
         """Remove whole hive partitions (Iceberg stand-in for a

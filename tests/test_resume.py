@@ -265,3 +265,108 @@ def test_seq_floor_monotone_under_stale_gc(tmp_path):
     assert [f for f in os.listdir(seq_dir) if f.startswith("_floor.")] == [
         "_floor.20"
     ]
+
+
+def test_record_commit_runs_no_spark_job(spark, tmp_path):
+    """A commit's ops rows are already on the driver: writing them must
+    not launch a Spark job, with or without metrics rows."""
+    wh = Warehouse(str(tmp_path / "wh_nojob"))
+    sc = spark.sparkContext
+    group = "test-record-commit-no-jobs"
+    sc.setJobGroup(group, "record_commit")
+    try:
+        CP.record_commit(spark, wh, "jobN", "s", ["p1", "p2"], "2:7", 3, 2,
+                         metrics={"rolled_points": 2.0})
+        CP.record_commit(spark, wh, "jobN", "s", ["p3"], "1:5", 1, 1, metrics=None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    done = {r.partition_id for r in
+            CP.committed_partitions(spark, wh, "jobN", "s").collect()}
+    assert done == {"p1", "p2", "p3"}
+
+
+def test_ops_tables_round_trip_schema_and_values(spark, tmp_path):
+    """Driver-written ops files read back through Spark with the declared
+    column names and types, a null `input_snapshot` and exact int64s."""
+    from drought_t_spark.schemas import CHECKPOINTS, LINEAGE, METRICS
+
+    wh = Warehouse(str(tmp_path / "wh_roundtrip"))
+    big = 2**62 + 3  # not representable as a float64
+    CP.record_commit(spark, wh, "jobR", "hour", ["g:1", "g:0"], "9:11", big, big - 1,
+                     metrics={"rolled_points": 5.0, "tokens": 0.25})
+    for tbl, schema in ((CP.CHECKPOINT_TBL, CHECKPOINTS), (CP.LINEAGE_TBL, LINEAGE),
+                        (CP.METRICS_TBL, METRICS)):
+        got = wh.read(spark, tbl).schema
+        assert [(f.name, f.dataType) for f in got.fields] == [
+            (f.name, f.dataType) for f in schema.fields
+        ]
+    (ln,) = wh.read(spark, CP.LINEAGE_TBL).collect()
+    assert ln.input_snapshot is None
+    assert (ln.rows_in, ln.rows_out) == (big, big - 1)
+    assert (ln.partition_id, ln.output_snapshot) == ("g:0,g:1", "9:11")
+    cp = wh.read(spark, CP.CHECKPOINT_TBL).collect()
+    assert sorted(r.partition_id for r in cp) == ["g:0", "g:1"]
+    assert {(r.state, r.snapshot_id, r.updated_seq) for r in cp} == {
+        ("committed", "9:11", 1)
+    }
+    mt = {r.name: r.value for r in wh.read(spark, CP.METRICS_TBL).collect()}
+    assert mt == {"rolled_points": 5.0, "tokens": 0.25}
+
+
+def test_ops_table_with_spark_written_append_still_resumes(spark, tmp_path):
+    """A warehouse whose checkpoints were appended by Spark keeps all of
+    those rows once driver-written commits land beside them."""
+    from drought_t_spark.schemas import CHECKPOINTS
+
+    wh = Warehouse(str(tmp_path / "wh_mixed"))
+    old = [("jobM", "hour", "3:0", "committed", "4:1", 7),
+           ("jobM", "hour", "3:1", "committed", "5:2", 7)]
+    spark.createDataFrame(old, CHECKPOINTS).write.mode("append").parquet(
+        wh.path(CP.CHECKPOINT_TBL)
+    )
+    CP._SEQ_CACHE.pop(wh.root, None)  # a new process on an existing warehouse
+    CP.record_commit(spark, wh, "jobM", "hour", ["3:2"], "6:3", 6, 6)
+    CP.record_commit(spark, wh, "jobM", "day", ["day:all"], "2:4", 6, 2)
+    rows = wh.read(spark, CP.CHECKPOINT_TBL).collect()
+    assert sorted((r.stage, r.partition_id, r.updated_seq) for r in rows) == [
+        ("day", "day:all", 9), ("hour", "3:0", 7), ("hour", "3:1", 7),
+        ("hour", "3:2", 8),
+    ]
+    done = {r.partition_id for r in
+            CP.committed_partitions(spark, wh, "jobM", "hour").collect()}
+    assert done == {"3:0", "3:1", "3:2"}
+    work = spark.createDataFrame([("3:0",), ("3:1",), ("3:2",), ("3:3",)], "source string")
+    pend = CP.pending_partitions(spark, wh, "jobM", "hour", work)
+    assert [r.source for r in pend.collect()] == ["3:3"]
+
+
+def test_leftover_temp_file_is_ignored(spark, tmp_path):
+    """A commit that died between the pyarrow write and the rename leaves
+    a hidden temp file; no reader may see its rows."""
+    import os
+
+    wh = Warehouse(str(tmp_path / "wh_leftover"))
+    CP.record_commit(spark, wh, "jobT", "hour", ["a"], "1:1", 1, 1)
+    d = wh.path(CP.CHECKPOINT_TBL)
+    (live,) = [f for f in os.listdir(d) if f.endswith(".parquet")]
+    # a complete parquet file under the temp name: the worst case
+    with open(os.path.join(d, live), "rb") as src, \
+            open(os.path.join(d, ".part-crashed.tmp"), "wb") as dst:
+        dst.write(src.read())
+    assert wh.read(spark, CP.CHECKPOINT_TBL).count() == 1
+    assert CP.committed_partitions(spark, wh, "jobT", "hour").count() == 1
+
+
+def test_commit_with_no_partitions_writes_no_checkpoint_rows(spark, tmp_path):
+    """Stream callers build `partition_ids` from their batch keys, which
+    can be empty: the commit still records lineage and does not raise."""
+    wh = Warehouse(str(tmp_path / "wh_empty"))
+    CP.record_commit(spark, wh, "jobE", "stream_compact", [], "0:0", 0, 0,
+                     metrics={"folded_batches": 0.0})
+    assert not wh.exists(CP.CHECKPOINT_TBL)
+    assert CP.committed_partitions(spark, wh, "jobE", "stream_compact").count() == 0
+    (ln,) = wh.read(spark, CP.LINEAGE_TBL).collect()
+    assert (ln.partition_id, ln.rows_in, ln.rows_out) == ("", 0, 0)
+    CP.record_commit(spark, wh, "jobE", "stream_compact", ["batch:1"], "1:1", 1, 1)
+    assert wh.read(spark, CP.CHECKPOINT_TBL).count() == 1
