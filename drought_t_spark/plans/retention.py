@@ -2,13 +2,13 @@
 north rule: hourly → daily → monthly tiers with bounded-horizon fine
 data).
 
-Two operators:
+Two operator families:
 
-* `expire_tier` — drop a tier's buckets older than a cutoff, but ONLY
-  after proving the next-coarser tier covers the expired range (a
-  left-anti coverage check — refusing is cheaper than losing data).
-  On the parquet shim this rewrites each affected source partition via
-  dynamic partition overwrite; on Iceberg with
+* `expire_tier` / `expire_payload_tier` — drop a tier's buckets older
+  than a cutoff, but ONLY after proving the next-coarser tier covers
+  the expired range. Both run one core, `_expire` (alignment and
+  coverage guards, counts, rewrite, commit); the rewrite is
+  `Warehouse.replace_sources`. On Iceberg with
   `PARTITIONED BY (days(bucket_start), bucket(source, N))` the same
   call is a metadata-only `DELETE WHERE bucket_start < cutoff` +
   `expire_snapshots` — the call site does not change shape.
@@ -26,6 +26,9 @@ Both record ops rows (lineage/metrics) like every other stage.
 
 from __future__ import annotations
 
+from datetime import datetime, timedelta
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,8 +43,93 @@ class RetentionError(RuntimeError):
     """Refusal to expire data the coarser tier does not cover."""
 
 
-def _trunc(tier: str, col):
-    return F.date_trunc(tier, col)
+def _parse_ts(t) -> datetime:
+    return t if isinstance(t, datetime) else datetime.fromisoformat(str(t))
+
+
+def _floor(coarser: str, t: datetime) -> datetime:
+    """Start of the `coarser` ("day" or "month") bucket holding `t`."""
+    d = t.replace(hour=0, minute=0, second=0, microsecond=0)
+    return d if coarser == "day" else d.replace(day=1)
+
+
+def _expire(
+    spark: SparkSession,
+    wh: Warehouse,
+    job_id: str,
+    kind: str,
+    tier: str,
+    cutoff,
+    keys: list[str],
+    metric: str,
+    stage: str,
+    archive=None,
+) -> dict:
+    """The expiry core shared by `expire_tier` (kind "tier") and
+    `expire_payload_tier` (kind "payload"): drop `agg.<kind>_<tier>`
+    rows with bucket_start < cutoff and commit `stage`.
+
+    Two guards run before anything is touched. The cutoff must sit on a
+    coarser-tier bucket boundary: a mid-day / mid-month cutoff would
+    pass the coverage check (the coarse bucket exists) yet expire only
+    part of that bucket's fine rows, leaving the routed reads with a
+    ragged edge inside a partially-expired bucket. And every (source,
+    coarser bucket) that would lose fine rows must already exist in the
+    committed `agg.<kind>_<coarser>` (one left-anti join, J5 shape);
+    refusing is cheaper than losing data. `archive(doomed, coarser)`,
+    if given, runs after the guards and before the drop. The doomed
+    sources are rewritten with `Warehouse.replace_sources`; a table
+    left with no row commits snapshot token "0:0"."""
+    tbl = f"agg.{kind}_{tier}"
+    coarser = COARSER.get(tier)
+    if coarser is None:
+        raise ValueError(f"{tbl} has no coarser tier to retain into")
+    cut_t = _parse_ts(cutoff)
+    aligned = _floor(coarser, cut_t)
+    if aligned != cut_t:
+        raise RetentionError(
+            f"cutoff {cut_t.isoformat()} is not aligned to a {coarser}-tier "
+            f"bucket boundary; expiring part of a {coarser} bucket would leave "
+            f"the routed reads unable to serve it exactly — use "
+            f"{aligned.isoformat()} or the next boundary"
+        )
+    df = wh.read(spark, tbl)
+    cutoff_lit = F.lit(cut_t).cast("timestamp")
+    doomed = df.where(F.col("bucket_start") < cutoff_lit)
+    cover = wh.read(spark, f"agg.{kind}_{coarser}").select(
+        "source", F.col("bucket_start").alias("cb")
+    )
+    n_uncovered = (
+        doomed.select("source", F.date_trunc(coarser, "bucket_start").alias("cb"))
+        .distinct()
+        .join(cover, ["source", "cb"], "left_anti")
+        .count()
+    )
+    if n_uncovered:
+        raise RetentionError(
+            f"{n_uncovered} (source, {coarser}-bucket) groups below the cutoff "
+            f"have no committed agg.{kind}_{coarser} row; refusing to expire"
+        )
+    n_before = df.count()
+    n_doomed = doomed.count()
+    if n_doomed:
+        if archive is not None:
+            archive(doomed, coarser)
+        affected = doomed.select("source").distinct()
+        kept = df.join(F.broadcast(affected), ["source"], "left_semi").where(
+            F.col("bucket_start") >= cutoff_lit
+        )
+        wh.replace_sources(kept, tbl, affected)
+    CP.record_commit(
+        spark, wh, job_id, f"{stage}_{tier}", [f"{tier}:{stage}"],
+        snapshot_id=(
+            Warehouse.snapshot_token(wh.read(spark, tbl), keys)
+            if wh.exists(tbl) else "0:0"
+        ),
+        rows_in=n_before, rows_out=n_before - n_doomed,
+        metrics={metric: float(n_doomed)},
+    )
+    return {"expired": n_doomed, "kept": n_before - n_doomed}
 
 
 def expire_tier(
@@ -52,12 +140,9 @@ def expire_tier(
     cutoff,
     archive_values: bool = False,
 ) -> dict:
-    """Expire `tier` buckets with bucket_start < cutoff (tier-aligned).
-
-    Safety invariant: every (source, coarser-bucket) that would lose
-    fine rows must already exist in the committed coarser tier; the
-    check is one left-anti join (J5 shape) and the whole call aborts
-    with RetentionError on any uncovered bucket. Returns counts.
+    """Expire `agg.tier_<tier>` buckets with bucket_start < cutoff, under
+    the alignment and coverage guards of `_expire` (RetentionError on
+    either). Returns {"expired", "kept"} row counts.
 
     `archive_values=True` additionally packs the doomed rows' float64
     `value` series into `agg.value_history_<tier>` (one row per
@@ -66,138 +151,75 @@ def expire_tier(
     so the fine-grained series stays recoverable bit-exactly after the
     integer stats have been downsampled away. The archive write is an
     idempotent per-source-partition overwrite, like every other sink."""
-    coarser = COARSER.get(tier)
-    if coarser is None:
-        raise ValueError(f"tier {tier!r} has no coarser tier to retain into")
-    # the cutoff must sit on a COARSER-tier bucket boundary: a mid-day /
-    # mid-month cutoff would pass the coverage check (the coarse bucket
-    # exists) yet expire only part of that bucket's fine rows, leaving
-    # read_series with a ragged edge inside a partially-expired bucket
-    from datetime import datetime
+    return _expire(
+        spark, wh, job_id, "tier", tier, cutoff, ["source", "bucket_start"],
+        "expired_rows", "retention",
+        partial(_archive_values, spark, wh, tier) if archive_values else None,
+    )
 
-    cut_t = cutoff if isinstance(cutoff, datetime) else datetime.fromisoformat(str(cutoff))
-    aligned = (
-        cut_t.replace(hour=0, minute=0, second=0, microsecond=0)
-        if coarser == "day"
-        else cut_t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
-    )
-    if aligned != cut_t:
-        raise RetentionError(
-            f"cutoff {cut_t.isoformat()} is not aligned to a {coarser}-tier "
-            f"bucket boundary; expiring part of a {coarser} bucket would break "
-            f"read_series exactness — use {aligned.isoformat()} or the next boundary"
-        )
-    tbl = f"agg.tier_{tier}"
-    df = wh.read(spark, tbl)
-    cutoff_lit = F.lit(cutoff).cast("timestamp")
-    doomed = df.where(F.col("bucket_start") < cutoff_lit)
-    cover = wh.read(spark, f"agg.tier_{coarser}").select(
-        "source", F.col("bucket_start").alias("cb")
-    )
-    uncovered = (
-        doomed.select("source", _trunc(coarser, "bucket_start").alias("cb"))
-        .distinct()
-        .join(cover, ["source", "cb"], "left_anti")
-    )
-    n_uncovered = uncovered.count()
-    if n_uncovered:
-        raise RetentionError(
-            f"{n_uncovered} (source, {coarser}-bucket) groups below the cutoff "
-            f"have no committed {coarser}-tier row; refusing to expire"
-        )
-    n_before = df.count()
-    n_doomed = doomed.count()
-    if n_doomed and archive_values:
-        from drought_t_spark.operators.value_history import (
-            pack_value_history,
-            unpack_value_history,
-        )
 
-        # partitioned by (source, cb=yyyyMMdd of the coarse bucket):
-        # successive retention cycles have strictly increasing ALIGNED
-        # cutoffs, so each cycle's coarse buckets are NORMALLY disjoint
-        # from every earlier cycle's — dynamic overwrite then replaces
-        # only THIS cycle's buckets (crash-replay of one cycle stays
-        # idempotent) and never destroys previously archived history.
-        # Partitioning by source alone did exactly that (one cycle wiped
-        # the whole source=X partition, including older cycles' rows).
-        # cb is int32 (yyyyMMdd — numeric order == date order) so the
-        # read path's literal range filter prunes partitions without
-        # fighting hive partition-type inference.
-        #
-        # LATE ARRIVALS break the disjointness: fine rows landing in an
-        # already-archived coarse bucket would make dynamic overwrite
-        # replace that (source, cb) partition with only the late rows,
-        # silently destroying the earlier archive. So overlapping
-        # partitions are MERGED: unpack the existing payload, drop any
-        # fine bucket the live tier re-supplies (the live row is the
-        # most recent computation and wins), union, repack. The overlap
-        # probe is one broadcast semi-join against this cycle's key set
-        # and the unpack cost is paid only for genuinely overlapping
-        # partitions — the common disjoint cycle takes the fast path
-        # untouched. Replay-idempotent: re-running a crashed cycle finds
-        # its own merged write, subtracts the doomed rows it re-supplies,
-        # and repacks identical content.
-        hist_tbl = f"agg.value_history_{tier}"
-        pack_src = doomed
-        cb_expr = F.date_format(
-            _trunc(coarser, "bucket_start"), "yyyyMMdd"
-        ).cast("int")
-        if wh.exists(hist_tbl):
-            cycle_keys = doomed.select("source", cb_expr.alias("cb")).distinct()
-            overlap = wh.read(spark, hist_tbl).join(
-                F.broadcast(cycle_keys), ["source", "cb"], "left_semi"
+def _archive_values(
+    spark: SparkSession, wh: Warehouse, tier: str, doomed: DataFrame, coarser: str
+) -> None:
+    from drought_t_spark.operators.value_history import (
+        pack_value_history,
+        unpack_value_history,
+    )
+
+    # partitioned by (source, cb=yyyyMMdd of the coarse bucket):
+    # successive retention cycles have strictly increasing ALIGNED
+    # cutoffs, so each cycle's coarse buckets are NORMALLY disjoint
+    # from every earlier cycle's — dynamic overwrite then replaces
+    # only THIS cycle's buckets (crash-replay of one cycle stays
+    # idempotent) and never destroys previously archived history.
+    # Partitioning by source alone did exactly that (one cycle wiped
+    # the whole source=X partition, including older cycles' rows).
+    # cb is int32 (yyyyMMdd — numeric order == date order) so the
+    # read path's literal range filter prunes partitions without
+    # fighting hive partition-type inference.
+    #
+    # LATE ARRIVALS break the disjointness: fine rows landing in an
+    # already-archived coarse bucket would make dynamic overwrite
+    # replace that (source, cb) partition with only the late rows,
+    # silently destroying the earlier archive. So overlapping
+    # partitions are MERGED: unpack the existing payload, drop any
+    # fine bucket the live tier re-supplies (the live row is the
+    # most recent computation and wins), union, repack. The overlap
+    # probe is one broadcast semi-join against this cycle's key set
+    # and the unpack cost is paid only for genuinely overlapping
+    # partitions — the common disjoint cycle takes the fast path
+    # untouched. Replay-idempotent: re-running a crashed cycle finds
+    # its own merged write, subtracts the doomed rows it re-supplies,
+    # and repacks identical content.
+    hist_tbl = f"agg.value_history_{tier}"
+    pack_src = doomed
+    cb_expr = F.date_format(
+        F.date_trunc(coarser, "bucket_start"), "yyyyMMdd"
+    ).cast("int")
+    if wh.exists(hist_tbl):
+        cycle_keys = doomed.select("source", cb_expr.alias("cb")).distinct()
+        overlap = wh.read(spark, hist_tbl).join(
+            F.broadcast(cycle_keys), ["source", "cb"], "left_semi"
+        )
+        if overlap.limit(1).count():
+            old_only = (
+                unpack_value_history(overlap)
+                .join(
+                    doomed.select("source", "bucket_start"),
+                    ["source", "bucket_start"],
+                    "left_anti",
+                )
+                .withColumn("gap_filled", F.lit(False))
             )
-            if overlap.limit(1).count():
-                old_only = (
-                    unpack_value_history(overlap)
-                    .join(
-                        doomed.select("source", "bucket_start"),
-                        ["source", "bucket_start"],
-                        "left_anti",
-                    )
-                    .withColumn("gap_filled", F.lit(False))
-                )
-                pack_src = doomed.select(
-                    "source", "bucket_start", "value", "gap_filled"
-                ).unionByName(
-                    old_only.select("source", "bucket_start", "value", "gap_filled")
-                )
-        hist = pack_value_history(pack_src, coarser).withColumn(
-            "cb", F.date_format("bucket_start", "yyyyMMdd").cast("int")
-        )
-        wh.write_partitioned(hist, hist_tbl, ["source", "cb"])
-    if n_doomed:
-        # rewrite only the source partitions that actually lose rows —
-        # dynamic partition overwrite leaves the others untouched. A
-        # fully-expired source writes NO rows, so dynamic overwrite
-        # would silently keep its old partition: those are dropped
-        # explicitly (Iceberg: the same DELETE handles both; the
-        # collected list is bounded by the affected-source count).
-        affected = doomed.select("source").distinct()
-        # materialized BEFORE the overwrite: the rewrite reads the same
-        # files it replaces, so the kept rows must leave the table first
-        kept = df.join(F.broadcast(affected), ["source"], "left_semi").where(
-            F.col("bucket_start") >= cutoff_lit
-        ).localCheckpoint(eager=True)
-        gone = [
-            r["source"]
-            for r in affected.join(
-                kept.select("source").distinct(), ["source"], "left_anti"
-            ).collect()
-        ]
-        wh.write_partitioned(kept, tbl, ["source"])
-        if gone:
-            wh.drop_partitions(tbl, "source", gone)
-    CP.record_commit(
-        spark, wh, job_id, f"retention_{tier}", [f"{tier}:retention"],
-        snapshot_id=Warehouse.snapshot_token(
-            wh.read(spark, tbl), ["source", "bucket_start"]
-        ),
-        rows_in=n_before, rows_out=n_before - n_doomed,
-        metrics={"expired_rows": float(n_doomed)},
+            pack_src = doomed.select(
+                "source", "bucket_start", "value", "gap_filled"
+            ).unionByName(
+                old_only.select("source", "bucket_start", "value", "gap_filled")
+            )
+    hist = pack_value_history(pack_src, coarser).withColumn(
+        "cb", F.date_format("bucket_start", "yyyyMMdd").cast("int")
     )
-    return {"expired": n_doomed, "kept": n_before - n_doomed}
+    wh.write_partitioned(hist, hist_tbl, ["source", "cb"])
 
 
 def read_values(
@@ -221,12 +243,7 @@ def read_values(
     crash-window overlap (archive written, drop not reached) is closed
     with a dropDuplicates on the key — both copies are bit-identical.
     Output: (source, bucket_start, value)."""
-    from datetime import datetime
-
-    def _parse(t) -> datetime:
-        return t if isinstance(t, datetime) else datetime.fromisoformat(str(t))
-
-    lo_t, hi_t = _parse(lo), _parse(hi)
+    lo_t, hi_t = _parse_ts(lo), _parse_ts(hi)
     if not lo_t < hi_t:
         raise ValueError(f"read_values needs lo < hi, got [{lo_t}, {hi_t})")
     coarser = COARSER.get(tier)
@@ -246,11 +263,7 @@ def read_values(
 
         # coarse bucket holding lo: floor to the coarser boundary so the
         # partition range covers fine rows late inside that bucket
-        c_lo = (
-            lo_t.replace(hour=0, minute=0, second=0, microsecond=0)
-            if coarser == "day"
-            else lo_t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
-        )
+        c_lo = _floor(coarser, lo_t)
         hist = wh.read(spark, hist_tbl).where(
             (F.col("cb") >= F.lit(int(c_lo.strftime("%Y%m%d"))))
             & (F.col("cb") <= F.lit(int(hi_t.strftime("%Y%m%d"))))
@@ -270,12 +283,6 @@ def read_values(
     return out.distinct()
 
 
-def _parse_ts(t):
-    from datetime import datetime
-
-    return t if isinstance(t, datetime) else datetime.fromisoformat(str(t))
-
-
 def route_slices(lo_t, hi_t) -> list[tuple[str, object, object]]:
     """Tier routing for [lo, hi): coarsest tier that fully covers each
     sub-range — month for whole months, day for whole days at the
@@ -284,26 +291,18 @@ def route_slices(lo_t, hi_t) -> list[tuple[str, object, object]]:
     on the driver so every tier scan downstream gets a LITERAL range
     filter (pushdown + partition pruning). Shared by `read_series` and
     `read_payloads` — one routing, two payloads."""
-    from datetime import timedelta
-
     def _ceil_day(t):
-        d = t.replace(hour=0, minute=0, second=0, microsecond=0)
+        d = _floor("day", t)
         return d if d == t else d + timedelta(days=1)
 
-    def _floor_day(t):
-        return t.replace(hour=0, minute=0, second=0, microsecond=0)
-
-    def _floor_month(t):
-        return t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
-
     def _ceil_month(t):
-        f = _floor_month(t)
+        f = _floor("month", t)
         if f == t:
             return f
         return f.replace(year=f.year + (f.month == 12), month=f.month % 12 + 1)
 
-    d_lo, d_hi = min(_ceil_day(lo_t), hi_t), max(_floor_day(hi_t), lo_t)
-    m_lo, m_hi = _ceil_month(d_lo), _floor_month(d_hi)
+    d_lo, d_hi = min(_ceil_day(lo_t), hi_t), max(_floor("day", hi_t), lo_t)
+    m_lo, m_hi = _ceil_month(d_lo), _floor("month", d_hi)
     use_month = m_lo < m_hi
     if not d_lo < d_hi:
         return [("hour", lo_t, hi_t)]
@@ -425,68 +424,11 @@ def expire_payload_tier(
     cutoff,
 ) -> dict:
     """Expire `agg.payload_<tier>` buckets with bucket_start < cutoff —
-    the payload twin of `expire_tier`, with the same two guards: the
-    cutoff must sit on a coarser-tier bucket boundary, and every
-    (source, coarser-bucket) losing fine payloads must already exist in
-    the committed coarser PAYLOAD tier (left-anti coverage check;
-    refusal beats data loss — the coarse payload holds the same token
-    stream bit-exactly, so nothing is lost once covered)."""
-    coarser = COARSER.get(tier)
-    if coarser is None:
-        raise ValueError(f"tier {tier!r} has no coarser payload tier to retain into")
-    cut_t = _parse_ts(cutoff)
-    aligned = (
-        cut_t.replace(hour=0, minute=0, second=0, microsecond=0)
-        if coarser == "day"
-        else cut_t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
+    the payload twin of `expire_tier`, under the same `_expire` guards
+    against the coarser PAYLOAD tier (the coarse payload holds the same
+    token stream bit-exactly, so nothing is lost once covered)."""
+    return _expire(
+        spark, wh, job_id, "payload", tier, cutoff,
+        ["source", "bucket_start", "chunk_id"], "expired_payload_rows",
+        "retention_payload",
     )
-    if aligned != cut_t:
-        raise RetentionError(
-            f"cutoff {cut_t.isoformat()} is not aligned to a {coarser}-tier "
-            f"bucket boundary; expiring part of a {coarser} payload bucket "
-            f"would leave read_payloads unable to serve it — use "
-            f"{aligned.isoformat()} or the next boundary"
-        )
-    tbl = f"agg.payload_{tier}"
-    df = wh.read(spark, tbl)
-    cutoff_lit = F.lit(cut_t).cast("timestamp")
-    doomed = df.where(F.col("bucket_start") < cutoff_lit)
-    cover = wh.read(spark, f"agg.payload_{coarser}").select(
-        "source", F.col("bucket_start").alias("cb")
-    )
-    uncovered = (
-        doomed.select("source", _trunc(coarser, "bucket_start").alias("cb"))
-        .distinct()
-        .join(cover, ["source", "cb"], "left_anti")
-    )
-    n_uncovered = uncovered.count()
-    if n_uncovered:
-        raise RetentionError(
-            f"{n_uncovered} (source, {coarser}-bucket) groups below the cutoff "
-            f"have no committed {coarser}-tier payload row; refusing to expire"
-        )
-    n_before = df.count()
-    n_doomed = doomed.count()
-    if n_doomed:
-        affected = doomed.select("source").distinct()
-        kept = df.join(F.broadcast(affected), ["source"], "left_semi").where(
-            F.col("bucket_start") >= cutoff_lit
-        ).localCheckpoint(eager=True)
-        gone = [
-            r["source"]
-            for r in affected.join(
-                kept.select("source").distinct(), ["source"], "left_anti"
-            ).collect()
-        ]
-        wh.write_partitioned(kept, tbl, ["source"])
-        if gone:
-            wh.drop_partitions(tbl, "source", gone)
-    CP.record_commit(
-        spark, wh, job_id, f"retention_payload_{tier}", [f"{tier}:retention_payload"],
-        snapshot_id=Warehouse.snapshot_token(
-            wh.read(spark, tbl), ["source", "bucket_start", "chunk_id"]
-        ),
-        rows_in=n_before, rows_out=n_before - n_doomed,
-        metrics={"expired_payload_rows": float(n_doomed)},
-    )
-    return {"expired": n_doomed, "kept": n_before - n_doomed}

@@ -2,11 +2,14 @@
 
 Iceberg is the production target (`writeTo(...).overwritePartitions()`,
 snapshot ids as checkpoint tokens); this sandbox has no Iceberg runtime
-jar, so the shim provides the same three primitives over a plain
-parquet warehouse with hive-style partitioning:
+jar, so the shim provides the same primitives over a plain parquet
+warehouse with hive-style partitioning:
 
 * idempotent partition overwrite — dynamic partitionOverwriteMode
   (re-running a stage replaces exactly the partitions it produces);
+* source-partition replace — the rewrite behind retention expiry and
+  the streaming folds: overwrite the `source=` partitions of new rows
+  and drop the affected ones left with no row (`replace_sources`);
 * append rows — for ops tables: the driver already holds the few rows
   a commit adds, so they are written as one parquet file per table
   with pyarrow (no Spark job), made visible by an atomic rename;
@@ -88,6 +91,28 @@ class Warehouse:
         tmp = os.path.join(d, f".part-{name}.tmp")
         pq.write_table(tbl, tmp, compression="zstd")
         os.rename(tmp, os.path.join(d, f"part-{name}.zstd.parquet"))
+
+    def replace_sources(self, rows: DataFrame, table: str, affected: DataFrame) -> DataFrame:
+        """Make `rows` the whole content of the `source=` partitions
+        named by `affected` (a one-column `source` frame); returns the
+        materialized rows. `rows` is materialized first because it
+        usually reads the files the overwrite replaces; a partition of
+        `affected` with no row left is dropped explicitly, since dynamic
+        overwrite cannot delete a partition it does not write. The
+        dropped set is an anti-join collected on the driver, so it is
+        bounded by the sources that empty, not by `affected`.
+        Iceberg: `overwritePartitions()` + `DELETE WHERE source IN (...)`."""
+        kept = rows.localCheckpoint(eager=True)
+        gone = [
+            r["source"]
+            for r in affected.join(
+                kept.select("source").distinct(), ["source"], "left_anti"
+            ).collect()
+        ]
+        self.write_partitioned(kept, table, ["source"])
+        if gone:
+            self.drop_partitions(table, "source", gone)
+        return kept
 
     def drop_partitions(self, table: str, partition_col: str, values: list[str]) -> None:
         """Remove whole hive partitions (Iceberg stand-in for a

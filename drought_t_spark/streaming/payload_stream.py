@@ -15,11 +15,11 @@ contract as the stats append stream), at which point all of its rows
 sit in the tail and one deterministic batch pack emits the final
 payload. Until then the live view serves the raw tail exactly.
 
+Both folds rewrite source partitions with `Warehouse.replace_sources`.
 Crash windows (parquet shim; on Iceberg each pair below is one
 transaction):
-  * seal: ledger-before-drop, replayed foreachBatch partitions are
-    recognized by `<stream-id>-<batch_id>` and dropped without
-    re-folding — identical machinery to `compact_stream_partials`.
+  * seal: ledger-before-drop; the fold ledger is `rollup_stream._unfolded`,
+    shared with `compact_stream_partials`.
   * pack: tier-write → tail-rewrite. A crash between the two leaves
     packed rows in the tail; the next pack classifies them as
     already-packed (their bucket is in the tier), drops them from the
@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from drought_t_spark.config import DEFAULT, EngineConfig
 from drought_t_spark.streaming.rollup_stream import (
     _stream_identity,
+    _unfolded,
     read_sequence_stream,
 )
 
@@ -81,35 +82,15 @@ def seal_payload_partials(spark: SparkSession, wh,
                           job_id: str = "stream-payload-seal") -> int:
     """Fold raw batch partitions into the per-source tail and drop them.
 
-    Same replay-safe shape as `compact_stream_partials`: the folded set
-    and the dropped set are pinned to one collected batch_key list;
-    folded keys are ledgered (scope `payload_seal`) BEFORE the drop, so
-    a foreachBatch replay of an already-folded batch is recognized and
-    its recreated partition dropped without re-folding. Only source
-    partitions present in the partials are rewritten. Returns the
-    number of batch partitions folded."""
+    Same replay-safe shape as `compact_stream_partials` (fold ledger
+    `_unfolded`, scope `payload_seal`, ledgered BEFORE the drop). Only
+    source partitions present in the partials are rewritten. Returns
+    the number of batch partitions folded."""
     from drought_t_spark.ops import checkpoints as CP
     from drought_t_spark.sources.warehouse import Warehouse
 
-    if not wh.exists(PAYLOAD_PARTIALS_TBL):
-        return 0
-    present = [
-        str(r.batch_key)
-        for r in wh.read(spark, PAYLOAD_PARTIALS_TBL)
-        .select("batch_key").distinct().collect()
-    ]
-    if not present:
-        return 0
-    folded_before = {
-        r.partition_id
-        for r in CP.committed_partitions(spark, wh, job_id, "payload_seal")
-        .where(F.col("partition_id").isin([f"batch:{b}" for b in present]))
-        .collect()
-    }
-    replayed = [b for b in present if f"batch:{b}" in folded_before]
-    if replayed:  # already in the tail — drop without re-folding
-        wh.drop_partitions(PAYLOAD_PARTIALS_TBL, "batch_key", replayed)
-    batch_keys = [b for b in present if f"batch:{b}" not in folded_before]
+    batch_keys = _unfolded(spark, wh, PAYLOAD_PARTIALS_TBL, job_id, "payload_seal",
+                           drop_replayed=True)
     if not batch_keys:
         return 0
     partials = wh.read(spark, PAYLOAD_PARTIALS_TBL).where(
@@ -124,11 +105,9 @@ def seal_payload_partials(spark: SparkSession, wh,
             .join(F.broadcast(affected), ["source"], "left_semi")
             .select(*_RAW_COLS)
         )
-    # materialize before the overwrite (the rewrite reads files it
-    # replaces); raw rows only — no aggregation, payloads are packed
-    # later once their bucket is complete
-    sealed = u.localCheckpoint(eager=True)
-    wh.write_partitioned(sealed, PAYLOAD_TAIL_TBL, ["source"])
+    # raw rows only — no aggregation, payloads are packed later once
+    # their bucket is complete
+    sealed = wh.replace_sources(u, PAYLOAD_TAIL_TBL, affected)
     CP.record_commit(
         spark, wh, job_id, "payload_seal", [f"batch:{b}" for b in batch_keys],
         snapshot_id=Warehouse.snapshot_token(
@@ -175,9 +154,9 @@ def pack_complete_buckets(
     the idempotent batch re-pack reconciles genuine late data.
 
     Only source partitions with complete rows are rewritten in either
-    table; a source whose tail empties is dropped explicitly (dynamic
-    overwrite cannot delete a partition it does not write). Returns the
-    number of (source, bucket, chunk) payload rows committed."""
+    table (`Warehouse.replace_sources`, which also drops a source whose
+    tail empties). Returns the number of (source, bucket, chunk) payload
+    rows committed."""
     from drought_t_spark.operators.rollup import pack_payloads
     from drought_t_spark.ops import checkpoints as CP
     from drought_t_spark.sources.warehouse import Warehouse
@@ -230,24 +209,13 @@ def pack_complete_buckets(
             wh.read(spark, "agg.payload_hour")
             .join(F.broadcast(affected), ["source"], "left_semi")
         )
-    # materialize before the overwrite (the pass-through reads files the
-    # dynamic overwrite replaces)
-    committed = out.localCheckpoint(eager=True)
-    wh.write_partitioned(committed, "agg.payload_hour", ["source"])
-
-    # shrink the tail: rewrite affected sources to their incomplete
-    # remainder; an emptied source partition must be dropped explicitly
-    remainder = (
+    committed = wh.replace_sources(out, "agg.payload_hour", affected)
+    # shrink the tail: affected sources keep their incomplete remainder
+    wh.replace_sources(
         tail.join(F.broadcast(affected), ["source"], "left_semi")
-        .where(bucket >= F.lit(cutoff))
-        .localCheckpoint(eager=True)
+        .where(bucket >= F.lit(cutoff)),
+        PAYLOAD_TAIL_TBL, affected,
     )
-    keep = {r.source for r in remainder.select("source").distinct().collect()}
-    gone = [r.source for r in affected.collect() if r.source not in keep]
-    if keep:
-        wh.write_partitioned(remainder, PAYLOAD_TAIL_TBL, ["source"])
-    if gone:
-        wh.drop_partitions(PAYLOAD_TAIL_TBL, "source", gone)
 
     CP.record_commit(
         spark, wh, job_id, "payload_pack", [f"cutoff:{cutoff.isoformat()}"],
@@ -265,30 +233,17 @@ def pack_complete_buckets(
 
 
 def _unsealed_partials(spark: SparkSession, wh) -> DataFrame | None:
-    """Raw partial rows NOT yet folded into the tail — replayed-but-
-    ledgered batch partitions are excluded so the live view never
-    double-counts across a seal replay (lookup cost is bounded by the
-    un-sealed batch count, never the all-time ledger)."""
-    from drought_t_spark.ops import checkpoints as CP
-
-    if not wh.exists(PAYLOAD_PARTIALS_TBL):
-        return None
-    p = wh.read(spark, PAYLOAD_PARTIALS_TBL)
-    present = [str(r.batch_key) for r in p.select("batch_key").distinct().collect()]
-    if not present:
-        return None
-    folded = {
-        r.partition_id
-        for r in CP.committed_partitions(
-            spark, wh, "stream-payload-seal", "payload_seal"
-        )
-        .where(F.col("partition_id").isin([f"batch:{b}" for b in present]))
-        .collect()
-    }
-    live = [b for b in present if f"batch:{b}" not in folded]
+    """Raw partial rows NOT yet folded into the tail (`_unfolded`), so
+    the live view never double-counts across a seal replay."""
+    live = _unfolded(spark, wh, PAYLOAD_PARTIALS_TBL, "stream-payload-seal",
+                     "payload_seal")
     if not live:
         return None
-    return p.where(F.col("batch_key").isin(live)).select(*_RAW_COLS)
+    return (
+        wh.read(spark, PAYLOAD_PARTIALS_TBL)
+        .where(F.col("batch_key").isin(live))
+        .select(*_RAW_COLS)
+    )
 
 
 def read_stream_tokens(spark: SparkSession, wh) -> DataFrame:

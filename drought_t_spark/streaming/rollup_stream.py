@@ -137,6 +137,39 @@ def start_tier_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
     )
 
 
+def _unfolded(spark: SparkSession, wh, table: str, job_id: str, scope: str,
+              drop_replayed: bool = False) -> list[str]:
+    """The fold ledger: batch_key partitions of `table` that the
+    (`job_id`, `scope`) fold has NOT yet recorded as checkpoint
+    partition ids `batch:<key>`. A present key the ledger already holds
+    is a foreachBatch replay of a folded batch (at-least-once delivery
+    after a crash); `drop_replayed=True` removes those partitions, which
+    only a fold may do. Keys are `<stream-id>-<batch_id>`, so a fresh
+    checkpoint's batch 0 is never mistaken for a replay. The lookup is
+    filtered to the present keys: its cost is bounded by the un-folded
+    batch count, never by the all-time fold history."""
+    from drought_t_spark.ops import checkpoints as CP
+
+    if not wh.exists(table):
+        return []
+    present = [
+        str(r.batch_key)
+        for r in wh.read(spark, table).select("batch_key").distinct().collect()
+    ]
+    if not present:
+        return []
+    folded = {
+        r.partition_id
+        for r in CP.committed_partitions(spark, wh, job_id, scope)
+        .where(F.col("partition_id").isin([f"batch:{b}" for b in present]))
+        .collect()
+    }
+    replayed = [b for b in present if f"batch:{b}" in folded]
+    if replayed and drop_replayed:
+        wh.drop_partitions(table, "batch_key", replayed)
+    return [b for b in present if f"batch:{b}" not in folded]
+
+
 def _merge_agg():
     # built lazily: Column construction needs an active SparkContext
     return [
@@ -176,65 +209,46 @@ def _merge_with_tier(spark: SparkSession, wh, partials: DataFrame) -> DataFrame:
 
 
 def read_stream_hour_tier(spark: SparkSession, wh) -> DataFrame:
-    """The live continuous aggregate: committed tier ⊎ stream partials.
-    Exact at any moment; only buckets the partials touch are re-merged —
-    untouched tier rows are served as-is. Cost grows with un-compacted
-    batch count (bucket-level rows per batch), so compact periodically."""
+    """The live continuous aggregate: committed tier ⊎ the partials
+    `_unfolded` reports (a replayed partition of an already-compacted
+    batch is in the tier and is not counted twice). Exact at any moment;
+    only buckets the partials touch are re-merged — untouched tier rows
+    are served as-is. Cost grows with un-compacted batch count
+    (bucket-level rows per batch), so compact periodically."""
     from drought_t_spark.operators.rollup import _finish
 
-    has_partials = wh.exists(PARTIALS_TBL)
-    assert wh.exists("agg.tier_hour") or has_partials, "no tier data ingested yet"
-    if not has_partials:
+    live = _unfolded(spark, wh, PARTIALS_TBL, "stream-compact", "stream_compact")
+    assert wh.exists("agg.tier_hour") or live, "no tier data ingested yet"
+    if not live:
         return _finish(
             wh.read(spark, "agg.tier_hour").where(~F.col("gap_filled")).select(*_STAT_COLS)
         )
-    return _merge_with_tier(spark, wh, wh.read(spark, PARTIALS_TBL))
+    return _merge_with_tier(
+        spark, wh, wh.read(spark, PARTIALS_TBL).where(F.col("batch_key").isin(live))
+    )
 
 
 def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compact") -> int:
     """Fold stream partials into the committed hour tier and drop them.
 
     Incremental: only SOURCE partitions present in the partials are
-    rewritten (dynamic partition overwrite + an explicit bucket-level
+    rewritten (`Warehouse.replace_sources` with an explicit bucket-level
     merge); every other committed partition's files are untouched —
     compaction cost is O(partials ∪ affected sources), not O(full tier).
 
     The folded set and the dropped set are IDENTICAL by construction:
-    the batch_key list is collected once and both the merge input and
-    the partition drop are filtered to it, so a micro-batch landing
-    between the two (stream still running) is neither folded nor
-    dropped — it just waits for the next compaction. Folded batch_keys
-    (= <stream-id>-<batch_id>, the stream id being the checkpoint's
-    stable identity) are recorded as checkpoint partition ids, so a
-    foreachBatch REPLAY of an already-folded batch (at-least-once
-    delivery after a crash) is recognized and its recreated partition
-    dropped without re-folding — no double count — while a FRESH
-    checkpoint's batch 0 carries a new stream id and is folded normally
-    (a bare-batch_id ledger would have silently dropped it). The ledger
-    lookup is filtered to the present keys, so its cost is bounded by
-    the un-compacted batch count, never by the all-time fold history.
+    the batch keys `_unfolded` returns are listed once and both the
+    merge input and the partition drop are filtered to them, so a
+    micro-batch landing between the two (stream still running) is
+    neither folded nor dropped — it just waits for the next compaction.
+    A replay of an already-folded batch is dropped without re-folding.
     Returns the number of batch partitions folded."""
+    from drought_t_spark.operators.rollup import _finish
     from drought_t_spark.ops import checkpoints as CP
     from drought_t_spark.sources.warehouse import Warehouse
 
-    if not wh.exists(PARTIALS_TBL):
-        return 0
-    present = [
-        str(r.batch_key)
-        for r in wh.read(spark, PARTIALS_TBL).select("batch_key").distinct().collect()
-    ]
-    if not present:
-        return 0
-    folded_before = {
-        r.partition_id
-        for r in CP.committed_partitions(spark, wh, job_id, "stream_compact")
-        .where(F.col("partition_id").isin([f"batch:{b}" for b in present]))
-        .collect()
-    }
-    replayed = [b for b in present if f"batch:{b}" in folded_before]
-    if replayed:  # already in the tier — drop without re-folding
-        wh.drop_partitions(PARTIALS_TBL, "batch_key", replayed)
-    batch_keys = [b for b in present if f"batch:{b}" not in folded_before]
+    batch_keys = _unfolded(spark, wh, PARTIALS_TBL, job_id, "stream_compact",
+                           drop_replayed=True)
     if not batch_keys:
         return 0
     # pin the fold to exactly these batches: a later-landing partition
@@ -243,36 +257,28 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
         F.col("batch_key").isin(batch_keys)
     )
     n_partials = partials.count()  # BEFORE the partitions are dropped
-    # merge ONLY the affected source partitions; materialize before the
-    # overwrite (the rewrite reads files it replaces)
     affected = partials.select("source").distinct()
-    tier_affected = (
-        wh.read(spark, "agg.tier_hour")
-        .join(F.broadcast(affected), ["source"], "left_semi")
-        .where(~F.col("gap_filled"))
-        .select(*_STAT_COLS)
-        if wh.exists("agg.tier_hour")
-        else None
-    )
-    from drought_t_spark.operators.rollup import _finish
-
     u = partials.select(*_STAT_COLS)
-    if tier_affected is not None:
-        u = u.unionByName(tier_affected)
-    merged = _finish(
-        u.groupBy("source", "bucket_start").agg(*_merge_agg())
-    ).localCheckpoint(eager=True)
-    # dynamic overwrite replaces exactly the affected source partitions
-    wh.write_partitioned(merged, "agg.tier_hour", ["source"])
+    if wh.exists("agg.tier_hour"):
+        u = u.unionByName(
+            wh.read(spark, "agg.tier_hour")
+            .join(F.broadcast(affected), ["source"], "left_semi")
+            .where(~F.col("gap_filled"))
+            .select(*_STAT_COLS)
+        )
+    merged = wh.replace_sources(
+        _finish(u.groupBy("source", "bucket_start").agg(*_merge_agg())),
+        "agg.tier_hour", affected,
+    )
     # ledger BEFORE the partition drop: a crash between the two leaves
     # folded-but-present partials, which the next compaction recognizes
-    # from the ledger and drops WITHOUT re-folding (the `replayed` path
-    # above). The only remaining unsafe window is tier-write → ledger —
-    # a crash exactly there leaves folded partials unledgered and the
-    # next compaction double-folds them. That gap is irreducible on the
-    # parquet shim (two separate writes can't be atomic); on Iceberg the
-    # tier overwrite and the ledger append become one transaction and
-    # the window closes. Documented, not hidden.
+    # from the ledger and drops WITHOUT re-folding. The only remaining
+    # unsafe window is tier-write → ledger — a crash exactly there
+    # leaves folded partials unledgered and the next compaction
+    # double-folds them. That gap is irreducible on the parquet shim
+    # (two separate writes can't be atomic); on Iceberg the tier
+    # overwrite and the ledger append become one transaction and the
+    # window closes. Documented, not hidden.
     CP.record_commit(
         spark, wh, job_id, "stream_compact", [f"batch:{b}" for b in batch_keys],
         snapshot_id=Warehouse.snapshot_token(merged, ["source", "bucket_start"]),

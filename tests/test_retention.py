@@ -4,12 +4,21 @@ coarser tier provably covers them, and the routed read serves each
 sub-range from the coarsest covering tier with exact additive totals.
 """
 
+import os
+import shutil
+from datetime import datetime, timedelta
+
 import pytest
 from pyspark.sql import functions as F
 
 from drought_t_spark import synth
 from drought_t_spark.config import EngineConfig
-from drought_t_spark.plans.retention import RetentionError, expire_tier, read_series
+from drought_t_spark.plans.retention import (
+    RetentionError,
+    expire_payload_tier,
+    expire_tier,
+    read_series,
+)
 from drought_t_spark.plans.rollup_job import run_rollup_job
 from drought_t_spark.sources.warehouse import Warehouse
 
@@ -280,7 +289,7 @@ def test_read_payloads_routed_reconstruction(spark, tmp_path):
     stream of the fine tier — including after the fine payloads expire
     behind the retention horizon."""
     from drought_t_spark.codec.udfs import decode_tokens_udf
-    from drought_t_spark.plans.retention import expire_payload_tier, read_payloads
+    from drought_t_spark.plans.retention import read_payloads
 
     wh = Warehouse(str(tmp_path / "wh_pay"))
     # 150k rows: the heaviest source spans ~61 days (through Mar 2
@@ -321,3 +330,57 @@ def test_read_payloads_routed_reconstruction(spark, tmp_path):
     got2 = _concat_tokens(read_payloads(spark, wh, lo, hi).toPandas())
     for src in want:
         assert got2[src] == want[src], f"post-expiry stream mismatch for {src}"
+
+
+@pytest.fixture(scope="module")
+def wh_short(spark, tmp_path_factory):
+    """Hour/day/month tiers with payloads for 3 sources of unequal
+    length: the heaviest runs ~2.5 days, the lightest ends on Jan 1."""
+    w = Warehouse(str(tmp_path_factory.mktemp("wh_short")))
+    seqs = synth.sequences_df(spark, n_sources=3, n_total=6_000)
+    run_rollup_job(spark, w, seqs, "jobE", CFG, n_groups=2, with_payloads=True)
+    return w
+
+
+@pytest.mark.parametrize("expire", [expire_tier, expire_payload_tier],
+                         ids=["expire_tier", "expire_payload_tier"])
+def test_expiry_that_empties_sources_then_the_tier(spark, wh_short, tmp_path, expire):
+    """A cutoff past one source's last bucket removes that source's
+    partition and keeps the other sources' rows as they were; a cutoff
+    past every bucket expires every row and still commits, with the
+    empty-table snapshot token "0:0"."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    shutil.copytree(wh_short.root, wh.root, dirs_exist_ok=True)
+    kind = "tier" if expire is expire_tier else "payload"
+    tbl = f"agg.{kind}_hour"
+    last = {
+        r.source: r.last
+        for r in wh.read(spark, tbl).groupBy("source")
+        .agg(F.max("bucket_start").alias("last")).collect()
+    }
+    cutoff = datetime(2024, 1, 2)
+    gone = [s for s, t in last.items() if t < cutoff]
+    assert gone and len(gone) < len(last), last
+    kept = wh.read(spark, tbl).where(F.col("bucket_start") >= cutoff).localCheckpoint(
+        eager=True
+    )
+    n_kept = kept.count()
+    res = expire(spark, wh, "jobE", "hour", cutoff)
+    assert res["kept"] == n_kept and res["expired"] > 0
+    for s in gone:
+        assert not os.path.exists(os.path.join(wh.path(tbl), f"source={s}"))
+    after = wh.read(spark, tbl)
+    assert after.exceptAll(kept).count() == 0 and kept.exceptAll(after).count() == 0
+
+    horizon = datetime.combine(max(last.values()).date(), datetime.min.time()) + timedelta(
+        days=1
+    )
+    assert expire(spark, wh, "jobE", "hour", horizon) == {"expired": n_kept, "kept": 0}
+    assert not wh.exists(tbl)
+    stage = "retention_hour" if kind == "tier" else "retention_payload_hour"
+    commits = (
+        wh.read(spark, "ops.checkpoints")
+        .where((F.col("job_id") == "jobE") & (F.col("stage") == stage))
+        .orderBy("updated_seq").collect()
+    )
+    assert [c.snapshot_id for c in commits][-1] == "0:0" and len(commits) == 2
